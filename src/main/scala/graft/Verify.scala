@@ -12,8 +12,9 @@ object Verify {
       Runtime.getRuntime.availableProcessors.toString)
     val spark = GraftSession.local(cpus)
     new java.io.File(outDir).mkdirs()
+    def selected(name: String) = only.forall(_.exists(name.startsWith))
     SparkEntry.queries
-      .filter { case (name, _) => only.forall(_.exists(name.startsWith)) }
+      .filter { case (name, _) => selected(name) }
       .foreach { case (name, fn) =>
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")
@@ -38,7 +39,9 @@ object Verify {
       case c if c < ' ' => f"\\u${c.toInt}%04x"
       case c => c.toString
     } + "\""
+    // the oracle file lists the same queries the dump ran
     val json = SparkEntry.oracleSql
+      .filter { case (name, _) => selected(name) }
       .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Same shutdown hygiene as Bench: the streaming queries leave the

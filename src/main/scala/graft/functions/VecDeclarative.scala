@@ -82,57 +82,6 @@ case class VecSumDecl(child: Expression, vecLen: Int)
   override def prettyName: String = "vec_sum"
 }
 
-/** Normal-equation accumulator, declarative. Mirror of [[GramAgg]]:
-  * per valid (design q, rating r, weight w) row,
-  *   XᵗX  += (w·qᵢ)·qⱼ   (rank² slots, row-major)
-  *   Xᵗy  += (w·qᵢ)·r    (rank slots)
-  *   n    += 1           (1 slot)
-  * with the imperative kernel's exact multiply order ((w·qᵢ) first) and
-  * its skip rules: a row with any null input contributes nothing, and a
-  * design array shorter than rank contributes only the slots whose
-  * BOTH indices are in range (the min(rank, len) loop bound).
-  */
-case class GramAggDecl(first: Expression, second: Expression,
-                       third: Expression, rank: Int)
-    extends DeclarativeAggregate
-    with org.apache.spark.sql.catalyst.trees.TernaryLike[Expression] {
-  private val bufLen = rank * rank + rank + 1
-  require(rank > 0 && bufLen <= VecDeclarative.MaxSlots)
-
-  private lazy val slots = (0 until bufLen).map(i =>
-    AttributeReference(s"gram$i", DoubleType, nullable = false)())
-
-  override lazy val aggBufferAttributes: Seq[AttributeReference] = slots
-  override lazy val initialValues: Seq[Expression] =
-    Seq.fill(bufLen)(Literal(0.0d))
-  override lazy val updateExpressions: Seq[Expression] = {
-    val anyNull = Or(Or(IsNull(first), IsNull(second)), IsNull(third))
-    val len = Size(first, legacySizeOfNull = false)
-    def q(i: Int): Expression = GetArrayItem(first, Literal(i), failOnError = false)
-    def guarded(maxIdx: Int, value: => Expression): Int => Expression = slot =>
-      If(Or(anyNull, LessThanOrEqual(len, Literal(maxIdx))), slots(slot),
-        Add(slots(slot), value))
-    val gram = for (i <- 0 until rank; j <- 0 until rank) yield
-      guarded(math.max(i, j), Multiply(Multiply(third, q(i)), q(j)))(i * rank + j)
-    val xty = (0 until rank).map { i =>
-      guarded(i, Multiply(Multiply(third, q(i)), second))(rank * rank + i)
-    }
-    val n = If(anyNull, slots(bufLen - 1),
-      Add(slots(bufLen - 1), Literal(1.0d)))
-    gram ++ xty :+ n
-  }
-  override lazy val mergeExpressions: Seq[Expression] =
-    slots.map(s => Add(s.left, s.right))
-  override lazy val evaluateExpression: Expression = CreateArray(slots)
-
-  override def dataType: DataType = ArrayType(DoubleType, containsNull = false)
-  override def nullable: Boolean = false
-  override protected def withNewChildrenInternal(newFirst: Expression,
-      newSecond: Expression, newThird: Expression): GramAggDecl =
-    copy(first = newFirst, second = newSecond, third = newThird)
-  override def prettyName: String = "gram_agg"
-}
-
 /** Σ s·v over a group, declarative. Mirror of [[VecScaleSum]]: rows
   * with a null scale or null vector contribute nothing (no-add), and
   * arrays shorter than vecLen truncate.

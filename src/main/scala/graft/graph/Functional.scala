@@ -32,15 +32,11 @@ object Functional {
     * Returns (id, value).
     */
   def bulkSync(edges: DataFrame, kernel: FunctionalKernel,
-               iterations: Int): DataFrame = {
-    import org.apache.spark.sql.functions._
-    val verts = edges.select(col("src").as("id"))
-      .union(edges.select(col("dst").as("id"))).distinct()
-    Pregel.run(verts, edges,
+               iterations: Int): DataFrame =
+    Pregel.run(Pregel.endpoints(edges), edges,
       initial = Map("value" -> kernel.initialValue),
       sendMsg = kernel.valueToNeighbor,
       aggMsg = kernel.plus,
       update = Map("value" -> kernel.compute),
       maxIter = iterations)
-  }
 }

@@ -12,7 +12,9 @@ import org.apache.spark.sql.{Column, DataFrame}
   * sum      → the message merge aggregate
   * apply    → the vertex update expressions
   * scatter  → implicit: the next superstep's gather reads the new state;
-  *            selective signalling = null messages (activeOnly)
+  *            a null gather sends nothing along that edge;
+  *            `activeOnly` = selective scheduling as in [[Pregel.run]]:
+  *            only vertices whose state changed last superstep send
   */
 final case class GasProgram(
     initial: Map[String, Column],
@@ -22,7 +24,7 @@ final case class GasProgram(
     activeOnly: Boolean = false)
 
 object Gas {
-  /** Run a GAS program for `iterations` supersteps. */
+  /** Run a GAS program for at most `iterations` supersteps. */
   def run(vertices: DataFrame, edges: DataFrame, program: GasProgram,
           iterations: Int): DataFrame =
     Pregel.run(vertices, edges,

@@ -34,6 +34,21 @@ object GraftShims {
   def expression(c: Column): org.apache.spark.sql.catalyst.expressions.Expression =
     org.apache.spark.sql.classic.ExpressionUtils.expression(c)
 
+  /** Top-level names of the columns `c` reads (`msg` for `msg.v`),
+    * through native expressions built over other Columns.
+    */
+  def columnReads(c: Column): Set[String] = {
+    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Expression}
+    import org.apache.spark.sql.classic.{ColumnNodeExpression, ColumnNodeToExpressionConverter}
+    def reads(e: Expression): Set[String] = e match {
+      case ColumnNodeExpression(node) => reads(ColumnNodeToExpressionConverter(node))
+      case a: org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute => Set(a.nameParts.head)
+      case a: AttributeReference => Set(a.name)
+      case other => other.children.flatMap(reads).toSet
+    }
+    reads(ColumnNodeToExpressionConverter(c.node))
+  }
+
   /** Flush the scheduler listener bus (private[spark]) so metrics
     * harvested by a SparkListener are complete before they are read —
     * listener delivery is async relative to job completion.

@@ -65,33 +65,6 @@ class VecDeclarativeSpec extends SparkSpec {
         s"group $k slot $i: ${dec(k)(i)} vs ${imp(k)(i)}")
   }
 
-  test("GramAggDecl == GramAgg bit-for-bit (nulls, ragged, awkward doubles)") {
-    // (design, rating, weight) with a null design, a ragged design and a
-    // null weight across two groups; rank 3 → 13 slots
-    val gdf = Seq(
-      (1L, Some(Seq(0.1, -2.7, 1.0 / 3.0)), Some(4.5), Some(1.0)),
-      (1L, Some(Seq(3.4028235e37, -0.0, 5e-324)), Some(-1.5), Some(0.3)),
-      (1L, None, Some(2.0), Some(1.0)),              // null design: skip
-      (1L, Some(Seq(9.0, 9.0, 9.0)), Some(1.0), None), // null weight: skip
-      (2L, Some(Seq(1.5, 2.5)), Some(0.5), Some(2.0)), // ragged: partial slots
-      (2L, Some(Seq(4.0, -5.0, 6.0)), Some(-1.0 / 7.0), Some(1.1)))
-      .toDF("k", "q", "r", "w")
-    def gmap(c: Column): Map[Long, Seq[Double]] =
-      gdf.groupBy("k").agg(c.as("g")).collect()
-        .map(row => row.getLong(0) -> row.getSeq[Double](1).toSeq).toMap
-    val dec = gmap(GraftShims.column(GramAggDecl(
-      GraftShims.expression(col("q")), GraftShims.expression(col("r")),
-      GraftShims.expression(col("w")), 3).toAggregateExpression()))
-    val imp = gmap(GraftShims.column(GramAgg(
-      GraftShims.expression(col("q")), GraftShims.expression(col("r")),
-      GraftShims.expression(col("w")), 3).toAggregateExpression()))
-    assert(dec.keySet == imp.keySet)
-    for (k <- dec.keySet; i <- 0 until 13)
-      assert(java.lang.Double.doubleToRawLongBits(dec(k)(i)) ==
-        java.lang.Double.doubleToRawLongBits(imp(k)(i)),
-        s"group $k slot $i: ${dec(k)(i)} vs ${imp(k)(i)}")
-  }
-
   test("the .of dispatch plans a HashAggregate (codegen), not ObjectHashAggregate") {
     val plan = df.groupBy("k")
       .agg(VecScaleSum.of(col("s"), col("v"), 3).as("g"),

@@ -63,6 +63,48 @@ class AlgorithmsSpec extends SparkSpec {
     assert(labels.length == 1)
   }
 
+  test("connectedComponentsWithDeltaLog: chain delta log is one fewer update per step") {
+    val e = edges(1L -> 2L, 2L -> 3L, 3L -> 4L, 4L -> 5L)
+    val (cc, log) = Algorithms.connectedComponentsWithDeltaLog(e)
+    assert(cc.collect().forall(_.getLong(1) == 1L))
+    val got = log.orderBy("iter").collect().map(r => (r.getInt(0), r.getLong(1))).toSeq
+    assert(got == Seq((1, 4L), (2, 3L), (3, 2L), (4, 1L)))
+  }
+
+  test("labelPropagation: ties go to the larger label, frequency beats size") {
+    // undirected 1-2, 1-3, 1-4, 4-5, labels start at the ids. Round 1:
+    // 1 sees {2,3,4} and 4 sees {1,5}, all ties, so 1 -> 4 and 4 -> 5.
+    // Round 2: 1 sees {1,1,5}, so the more frequent 1 beats the larger 5.
+    // The same again with vertex 1 at Long.MinValue.
+    for (base <- Seq(0L, Long.MinValue - 1L)) {
+      val e = edges(Seq(1L -> 2L, 1L -> 3L, 1L -> 4L, 4L -> 5L)
+        .map { case (a, b) => (a + base, b + base) }: _*)
+      def lpa(n: Int) = Algorithms.labelPropagation(e, iterations = n)
+        .collect().map(r => (r.getLong(0) - base) -> (r.getLong(1) - base)).toMap
+      assert(lpa(1) == Map(1L -> 4L, 2L -> 1L, 3L -> 1L, 4L -> 5L, 5L -> 4L))
+      assert(lpa(2) == Map(1L -> 1L, 2L -> 4L, 3L -> 4L, 4L -> 4L, 5L -> 5L))
+    }
+  }
+
+  test("seededLabelPropagation: exact labels and distributions") {
+    val e = Seq((1L, 2L, 1.0), (2L, 3L, 2.0), (3L, 1L, 0.5), (3L, 4L, 1.0),
+      (4L, 5L, 3.0), (5L, 6L, 1.0), (6L, 4L, 0.25), (2L, 5L, 0.5))
+      .toDF("src", "dst", "weight")
+    val seeds = Seq((1L, 0), (6L, 2)).toDF("id", "label")
+    val got = Algorithms.seededLabelPropagation(e, seeds, numLabels = 3,
+        iterations = 3)
+      .select(col("id"), col("label"), transform(col("dist"), d => round(d, 9)))
+      .collect().map(r => r.getLong(0) -> (r.getLong(1), r.getSeq[Double](2).toSeq))
+      .toMap
+    assert(got == Map(
+      1L -> (0L, Seq(1.0, 0.0, 0.0)),
+      2L -> (0L, Seq(0.99775, 0.001125, 0.001125)),
+      3L -> (0L, Seq(0.9595, 0.02025, 0.02025)),
+      4L -> (0L, Seq(0.594425, 0.103125, 0.30245)),
+      5L -> (2L, Seq(0.369114286, 0.234935714, 0.39595)),
+      6L -> (2L, Seq(0.0, 0.0, 1.0))))
+  }
+
   test("kCore: triangle survives 2-core, pendant vertex does not") {
     val e = edges(1L -> 2L, 2L -> 3L, 3L -> 1L, 3L -> 4L)
     val core = Algorithms.kCore(e, 2).collect().map(_.getLong(0)).toSet
