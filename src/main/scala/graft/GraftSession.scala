@@ -26,6 +26,8 @@ object GraftSession {
       // FM_INFLATION_ANALYSIS.md r10 addendum). 2000 entries ≈ a few
       // hundred MB worst case on a driver sized for this engine.
       .config("spark.sql.codegen.cache.maxEntries", "2000")
+      // checkpoint scans that a self-join uses twice share their exchanges
+      .withExtensions(_.injectPlannerStrategy(_ => org.apache.spark.sql.GraftShims.CheckpointScan))
   def local(cpus: String): SparkSession = {
     val b = builder(s"local[$cpus]", cpus)
     // A/B instrumentation hook (the SPARK_GRAFT_AGG_FALLBACK pattern,

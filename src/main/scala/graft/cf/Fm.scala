@@ -128,8 +128,9 @@ object Fm {
       .transform(graft.graph.Iterate.ckpt)
 
     // The per-example frame is NEVER materialized (see MfSgd.train):
-    // its aggregation is exchange-free (flat is hash-partitioned on
-    // example_id and the weight side broadcasts), so the gradient job
+    // its aggregation is exchange-free (the flat checkpoint declares its
+    // hash partitioning on example_id, and the small weight checkpoint
+    // broadcasts), so the gradient job
     // recomputes it straight off the cached flat — cheaper than writing
     // and re-reading a |R|-row checkpoint per iteration. With no
     // |R|-row checkpoint to pin, the trace defers safely too: the lazy

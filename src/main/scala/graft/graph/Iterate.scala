@@ -4,24 +4,21 @@ import org.apache.spark.sql.{DataFrame, GraftShims}
 
 /** Checkpoint helper for iterative drivers. Always use this instead of
   * `localCheckpoint` inside superstep loops: it materializes the frame
-  * AND drops inherited plan statistics (see
-  * [[org.apache.spark.sql.GraftShims.freshCheckpoint]] — Spark 4's
-  * localCheckpoint propagates estimated stats through the checkpoint,
-  * which squares per iteration in join loops and eventually overflows
-  * the BigInt size estimate).
+  * and gives the planner exact statistics (stored bytes, row count) and
+  * the partitioning the frame was materialized with, instead of
+  * estimates inherited through the checkpoint, which square per
+  * iteration in join loops and eventually overflow the BigInt size
+  * estimate (see [[org.apache.spark.sql.GraftShims]]).
   */
 object Iterate {
   def ckpt(df: DataFrame): DataFrame = GraftShims.freshCheckpoint(df)
 
   /** Checkpoint `df` and return its row count, harvested from the
-    * materializing `count()` action itself (r16, guide §2 job cadence) —
-    * superstep loops need a convergence/progress count every round, and
-    * a separate `count()`/`isEmpty` action costs one more
-    * driver-blocking job per superstep plus a full re-scan of the
-    * just-materialized blocks. Synchronous — no extra job, no listener
-    * round-trip (a `Dataset.observe` variant was A/B'd and REJECTED: its
-    * metric arrives via the shared listener bus, and the per-superstep
-    * `get` wait regressed the many-superstep CC queries 15–25%).
+    * materializing job itself. Superstep loops need a convergence or
+    * progress count every round; a separate `count()`/`isEmpty` action
+    * costs one more driver-blocking job per superstep, and a
+    * `Dataset.observe` variant regressed the many-superstep CC queries
+    * 15–25 % (its metric arrives via the listener bus).
     * See [[org.apache.spark.sql.GraftShims.freshCheckpointCounted]].
     */
   def ckptN(df: DataFrame): (DataFrame, Long) = {
@@ -29,14 +26,11 @@ object Iterate {
     (out, n)
   }
 
-  /** Checkpoint `df` and return the sum of long column `sumCol`,
-    * accumulated during the materializing pass (same mechanism as
-    * [[ckptN]]; the column must be materialized in the frame). Callers
-    * test the sum against 0 or for round-over-round equality of a
-    * monotone quantity — both exact under accumulator task-retry
-    * semantics (re-running rows that sum to zero adds zero; a decrease
-    * in a monotone non-increasing sum cannot be masked because every
-    * per-row contribution is non-negative).
+  /** Checkpoint `df` and return the sum of long column `sumCol` (nulls
+    * skipped), taken in the materializing job (same mechanism as
+    * [[ckptN]]; the column must be materialized in the frame). The sum
+    * is built from one result per partition, so task retries cannot
+    * double-count it.
     */
   def ckptSum(df: DataFrame, sumCol: String): (DataFrame, Long) = {
     val (out, _, s) = GraftShims.freshCheckpointCounted(df, Some(sumCol))

@@ -1,7 +1,12 @@
 package org.apache.spark.sql
 
 import org.apache.spark.sql.classic.{Dataset => CDataset, SparkSession => CSparkSession}
+import org.apache.spark.sql.catalyst.InternalRow
+import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeMap, AttributeSeq, AttributeSet, Expression, SortOrder}
+import org.apache.spark.sql.catalyst.plans.logical.Statistics
+import org.apache.spark.sql.catalyst.plans.physical.{Partitioning, PartitioningCollection, UnknownPartitioning}
 import org.apache.spark.sql.execution.LogicalRDD
+import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec
 
 /** Internal shim for graft's iterative drivers.
   *
@@ -12,13 +17,19 @@ import org.apache.spark.sql.execution.LogicalRDD
   * every superstep — after ~25 iterations the BigInt estimate has
   * ~2^30 bits and the stats visitor melts down in BigInteger multiply
   * (observed: minutes of driver CPU, then "BigInteger would overflow
-  * supported range").
+  * supported range"). Under adaptive execution it also reports
+  * `UnknownPartitioning`, because the root `AdaptiveSparkPlanExec`
+  * does.
   *
-  * `freshCheckpoint` materializes like localCheckpoint but rebuilds the
-  * frame on a bare `LogicalRDD` with no inherited stats, so every
-  * superstep starts from a clean leaf estimate. Runtime adaptivity
-  * (AQE) still sees the true materialized sizes, so join strategy
-  * selection is unaffected at execution time.
+  * `freshCheckpointCounted` materializes like localCheckpoint but
+  * builds the leaf itself, from what the materializing pass measured:
+  * the exact row count and stored bytes (reset at every checkpoint, so
+  * nothing compounds), and the partitioning and ordering of the plan
+  * that actually ran. The planner can then broadcast a small pinned
+  * table, and a later aggregate or join on the checkpoint's own key
+  * needs no exchange on that side. [[CheckpointScanExec]] keeps the
+  * copies of one checkpoint in a self-join sharing their exchanges once
+  * a partitioning is declared.
   */
 object GraftShims {
   /** `types.AbstractDataType` is private[sql]; alias it so graft's
@@ -82,80 +93,124 @@ object GraftShims {
     org.apache.spark.storage.StorageLevel.fromString(
       sys.env.getOrElse("SPARK_GRAFT_CKPT_LEVEL", "MEMORY_AND_DISK"))
 
-  def freshCheckpoint(df: DataFrame): DataFrame = {
-    val cdf = df.asInstanceOf[CDataset[Row]]
-    val spark = cdf.sparkSession.asInstanceOf[CSparkSession]
-    val ck = cdf.localCheckpoint(true, ckptLevel).asInstanceOf[CDataset[Row]]
-    debugWalk(cdf)
-    // localCheckpoint's own LogicalRDD carries the materialized plan's
-    // output partitioning/ordering (attribute-rewritten). Keep those —
-    // they let EnsureRequirements elide one exchange per superstep when
-    // the loop re-joins on the same key — while still dropping the
-    // inherited stats (the blowup documented above).
-    ck.queryExecution.analyzed match {
-      case lr: LogicalRDD =>
-        CDataset.ofRows(spark,
-          LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
-            lr.outputOrdering, lr.isStreaming)(spark))
-      case other =>
-        CDataset.ofRows(spark,
-          LogicalRDD(other.output, ck.queryExecution.toRdd)(spark))
-    }
-  }
+  def freshCheckpoint(df: DataFrame): DataFrame = freshCheckpointCounted(df)._1
 
-  /** Like [[freshCheckpoint]], but ALSO returns the materialized row
-    * count — and, when `sumCol` names a long column, that column's sum —
-    * harvested from the materializing pass itself (r16, guide §2 job
-    * cadence: superstep loops need a convergence/progress count, and
-    * both a separate count() job and a `Dataset.observe` read cost more
-    * than this — the former a full re-scan of the just-written blocks
-    * plus a scheduler round-trip per superstep, the latter a listener-
-    * bus wait that stalls the driver tens of ms per superstep when the
-    * bus is busy).
+  /** Checkpoint `df` and also return its row count and, when `sumCol`
+    * names a long column, that column's sum (nulls skipped). Superstep
+    * loops need a convergence/progress count, and both a separate
+    * count() job and a `Dataset.observe` read cost more than this: the
+    * former re-scans the just-written blocks in one more job, the latter
+    * waits on the listener bus every superstep.
     *
-    * Mirrors `Dataset.localCheckpoint(eager = true, level)` exactly:
-    * execute the physical plan, copy rows, persist at the checkpoint
-    * level, mark for local checkpointing, materialize with `count()` —
-    * whose return value IS the row count (the stock path discards it) —
-    * and rebuild on a bare stats-free `LogicalRDD` with the
-    * attribute-rewritten partitioning/ordering kept
-    * (`LogicalRDD.fromDataset`, the same helper the stock checkpoint
-    * uses). The optional column sum rides a `LongAccumulator` updated in
-    * the same pass; accumulator task-retry semantics make zero-tests
-    * exact (a re-run of rows that sum to zero adds zero; duplicated
-    * nonzero reports stay nonzero) — every caller tests == 0 or
-    * round-over-round equality of a monotone quantity.
+    * Mirrors `Dataset.localCheckpoint(eager = true, level)`: execute
+    * the physical plan, copy rows, persist at the checkpoint level, mark
+    * for local checkpointing and materialize with one job. That job's
+    * tasks read back their stored block and return its rows, column sum
+    * and stored bytes; a job keeps one result per partition, so the
+    * figures are exact under task retries.
     */
   def freshCheckpointCounted(df: DataFrame,
                              sumCol: Option[String] = None): (DataFrame, Long, Long) = {
+    import org.apache.spark.storage.RDDBlockId
     val cdf = df.asInstanceOf[CDataset[Row]]
     val spark = cdf.sparkSession.asInstanceOf[CSparkSession]
     val qe = cdf.queryExecution
-    val acc = sumCol.map(c =>
-      spark.sparkContext.longAccumulator(s"graft.ckptSum($c)"))
-    val (rdd, n) = org.apache.spark.sql.execution.SQLExecution
-      .withNewExecutionId(qe, Some("graftCkptCounted")) {
-        val base = qe.executedPlan.execute()
-        val mapped = (acc, sumCol) match {
-          case (Some(a), Some(c)) =>
-            val i = qe.executedPlan.output.indexWhere(_.name == c)
-            require(i >= 0, s"freshCheckpointCounted: no column '$c' in " +
-              qe.executedPlan.output.map(_.name).mkString(", "))
-            base.mapPartitions { it =>
-              it.map { r => if (!r.isNullAt(i)) a.add(r.getLong(i)); r.copy() }
-            }
-          case _ => base.map(_.copy())
-        }
-        mapped.persist(ckptLevel)
-        mapped.localCheckpoint()
-        (mapped, mapped.count())
+    val i = sumCol.fold(-1) { c =>
+      val i = qe.executedPlan.output.indexWhere(_.name == c)
+      require(i >= 0, s"freshCheckpointCounted: no column '$c' in " +
+        qe.executedPlan.output.map(_.name).mkString(", "))
+      i
+    }
+    val (rdd, parts) = org.apache.spark.sql.execution.SQLExecution
+      .withNewExecutionId(qe, Some("graftCkpt")) {
+        val rdd = qe.executedPlan.execute().map(_.copy())
+        rdd.persist(ckptLevel)
+        rdd.localCheckpoint()
+        val id = rdd.id
+        val parts = if (rdd.getNumPartitions == 0) {
+          // nothing to store: no job, as in localCheckpoint
+          rdd.doCheckpoint()
+          Array.empty[(Long, Long, Option[Long])]
+        } else spark.sparkContext.runJob(rdd, (ctx: org.apache.spark.TaskContext,
+                                                it: Iterator[InternalRow]) => {
+          var n, s = 0L
+          it.foreach { r => n += 1; if (i >= 0 && !r.isNullAt(i)) s += r.getLong(i) }
+          val bytes = org.apache.spark.SparkEnv.get.blockManager
+            .getStatus(RDDBlockId(id, ctx.partitionId())).map(b => b.memSize + b.diskSize)
+          (n, s, bytes)
+        })
+        (rdd, parts)
       }
-    debugWalk(cdf)
-    val lr = LogicalRDD.fromDataset(rdd, cdf, cdf.isStreaming)
-    val out = CDataset.ofRows(spark,
-      LogicalRDD(lr.output, lr.rdd, lr.outputPartitioning,
-        lr.outputOrdering, lr.isStreaming)(spark))
-    (out, n, acc.map(_.value.longValue).getOrElse(0L))
+    val n = parts.map(_._1).sum
+    // a block missing from its store leaves the size unknown: no stats
+    val bytes = if (parts.forall(_._3.isDefined)) Some(parts.flatMap(_._3).sum) else None
+    val output = qe.analyzed.output
+    val (partitioning, ordering) = layout(qe, output, rdd.getNumPartitions)
+    val leaf = LogicalRDD(output, rdd, partitioning, ordering)(spark,
+      bytes.map(b => Statistics(sizeInBytes = b, rowCount = Some(n))))
+    debugWalk(cdf, leaf, n)
+    (CDataset.ofRows(spark, leaf), n, parts.map(_._2).sum)
+  }
+
+  /** Partitioning and ordering of the plan that materialized a
+    * checkpoint, on the checkpoint's `output`. An adaptive root reports
+    * `UnknownPartitioning`; its final plan, once executed, reports the
+    * real one. A partitioning is kept only when it describes the
+    * materialized RDD (same partition count) and reads output columns
+    * only; the ordering keeps its longest such prefix.
+    */
+  private def layout(qe: org.apache.spark.sql.execution.QueryExecution,
+                     output: Seq[Attribute],
+                     numPartitions: Int): (Partitioning, Seq[SortOrder]) = {
+    val plan = qe.executedPlan match {
+      case a: AdaptiveSparkPlanExec => a.executedPlan
+      case p => p
+    }
+    val toOut = AttributeMap(plan.output.zip(output))
+    val outSet = AttributeSet(output)
+    def rewrite(e: Expression): Option[Expression] =
+      Some(e.transform { case a: Attribute => toOut.getOrElse(a, a) })
+        .filter(_.references.subsetOf(outSet))
+    def leaves(p: Partitioning): Seq[Partitioning] = p match {
+      case c: PartitioningCollection => c.partitionings.flatMap(leaves)
+      case p => Seq(p)
+    }
+    val partitioning = leaves(plan.outputPartitioning)
+      .filter(_.numPartitions == numPartitions)
+      .flatMap {
+        case e: Expression => rewrite(e).map(_.asInstanceOf[Partitioning])
+        case p => Some(p)
+      }
+      .headOption.getOrElse(UnknownPartitioning(0))
+    val ordering = plan.outputOrdering.iterator
+      .map(o => rewrite(o.child).map(c => SortOrder(c, o.direction, o.nullOrdering, Nil)))
+      .takeWhile(_.isDefined).flatten.toSeq
+    (partitioning, ordering)
+  }
+
+  /** Plans every `LogicalRDD` as a [[CheckpointScanExec]];
+    * `graft.GraftSession.builder` installs it.
+    */
+  object CheckpointScan extends org.apache.spark.sql.execution.SparkStrategy {
+    def apply(plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan)
+        : Seq[org.apache.spark.sql.execution.SparkPlan] = plan match {
+      case r: LogicalRDD => new CheckpointScanExec(r.output, r.rdd, "ExistingRDD",
+        r.outputPartitioning, r.outputOrdering, r.stream) :: Nil
+      case _ => Nil
+    }
+  }
+
+  /** `RDDScanExec` whose canonical form also normalizes the attribute ids
+    * of its partitioning and ordering. The stock node leaves them as they
+    * are, so the copies of one checkpoint that a self-join re-instances
+    * (fresh ids) never canonicalize equal once a partitioning is declared,
+    * and every exchange or broadcast above them runs once per copy.
+    */
+  class CheckpointScanExec(o: Seq[Attribute], r: org.apache.spark.rdd.RDD[InternalRow],
+                           n: String, p: Partitioning, ord: Seq[SortOrder],
+                           s: Option[org.apache.spark.sql.connector.read.streaming.SparkDataStream])
+      extends org.apache.spark.sql.execution.RDDScanExec(o, r, n, p, ord, s) {
+    override def allAttributes: AttributeSeq = output
   }
 
   /** Debug hook (GRAFT_DEBUG_CKPT): the iterative drivers' heavy
@@ -163,12 +218,14 @@ object GraftShims {
     * their executed-plan metrics are invisible to any walk of the
     * caller's final frame — print them here, where the executed AQE
     * plan (and its populated SQLMetrics, e.g. ObjectHashAggregate's
-    * numTasksFallBacked) is still in hand. Diagnostic only.
+    * numTasksFallBacked) is still in hand — then the leaf the planner
+    * will see: rows, stored bytes and declared partitioning. Diagnostic
+    * only.
     */
-  private def debugWalk(cdf: CDataset[Row]): Unit = {
+  private def debugWalk(cdf: CDataset[Row], leaf: LogicalRDD, rows: Long): Unit = {
     if (graft.tools.Proc.envFlag("GRAFT_DEBUG_CKPT")) {
       import org.apache.spark.sql.execution.aggregate.BaseAggregateExec
-      import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+      import org.apache.spark.sql.execution.adaptive.QueryStageExec
       def walk(p: org.apache.spark.sql.execution.SparkPlan): Unit = {
         p match {
           case a: AdaptiveSparkPlanExec => walk(a.executedPlan)
@@ -197,6 +254,9 @@ object GraftShims {
       // the INPUT frame's physical plan is what the checkpoint action
       // executed (the result frame is just a scan of the materialized RDD)
       walk(cdf.queryExecution.executedPlan)
+      val bytes = leaf.stats.sizeInBytes
+      System.err.println(s"[ckpt] rows=$rows bytes=$bytes " +
+        s"partitioning=${leaf.outputPartitioning}")
     }
   }
 }

@@ -208,4 +208,26 @@ class PlanShapeSpec extends SparkSpec {
       }, s"offset window must consume pre-aggregated bucket counts: $w")
     }
   }
+
+  test("a small checkpoint broadcasts at plan time; above the threshold it does not") {
+    import org.apache.spark.sql.catalyst.plans.logical.Join
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val small = graft.graph.Iterate.ckpt(spark.range(100)
+      .select(col("id").as("k"), lit(1L).as("v")))
+    // the range side estimates 80 MB: never a broadcast candidate
+    def join = spark.range(10000000L).join(small, col("id") === col("k"))
+    val bytes = join.queryExecution.optimizedPlan
+      .collectFirst { case j: Join => j.right.stats.sizeInBytes }.get
+    assert(countJoins(join, "BroadcastHashJoin") == 1,
+      s"a $bytes-byte checkpoint must broadcast without a runtime statistic")
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, (bytes - 1).toString)
+    try {
+      assert(countJoins(join, "BroadcastHashJoin") == 0,
+        "a checkpoint above the threshold must not broadcast")
+    } finally prev match {
+      case Some(v) => spark.conf.set(key, v)
+      case None => spark.conf.unset(key)
+    }
+  }
 }

@@ -7,8 +7,8 @@ import graft.SparkSpec
   * `ckptSum`): the count/sum must come from the materializing pass
   * itself (no separate action), the returned frame must be materialized
   * and row-identical to the input, re-reads must not perturb the
-  * harvested values, and the partitioning-preservation property of the
-  * plain checkpoint must survive (same LogicalRDD rebuild path).
+  * harvested values. Every checkpoint leaf reports its stored bytes,
+  * row count and the partitioning of the plan that materialized it.
   */
 class IterateSpec extends SparkSpec {
   import spark.implicits._
@@ -55,18 +55,65 @@ class IterateSpec extends SparkSpec {
     }
   }
 
+  // the adaptive root is a leaf node, so read its printed initial plan
+  private def exchanges(df: org.apache.spark.sql.DataFrame): Int =
+    df.queryExecution.executedPlan.toString.linesIterator.count(_.contains("Exchange"))
+
   test("ckptN preserves output partitioning like ckpt does") {
-    val df = Seq((1L, 2L), (3L, 4L), (1L, 5L)).toDF("k", "v")
+    val df = spark.range(0, 2000, 1, 4)
+      .select((col("id") % 37).as("k"), col("id").as("v"))
       .repartition(col("k"))
-    val (out, _) = Iterate.ckptN(df)
-    // a re-join on the same key must not need a fresh exchange on the
-    // checkpointed side — the same property freshCheckpoint preserves
-    val other = Seq((1L, 9L)).toDF("k", "w").repartition(col("k"))
-    val joined = out.join(other, "k")
-    val plan = joined.queryExecution.executedPlan.toString
-    val nExchanges = "Exchange hashpartitioning".r
-      .findAllIn(plan).length
-    assert(nExchanges <= 1, s"expected the ckptN side to keep its " +
-      s"partitioning (≤1 exchange for the fresh side), got:\n$plan")
+    val want = df.groupBy("k").agg(sum("v").as("s")).collect()
+      .map(r => (r.getLong(0), r.getLong(1))).sorted
+    for ((name, ck) <- Seq("ckpt" -> Iterate.ckpt(df), "ckptN" -> Iterate.ckptN(df)._1)) {
+      val agg = ck.groupBy("k").agg(sum("v").as("s"))
+      assert(exchanges(agg) === 0, s"$name: the checkpoint's hash partitioning " +
+        s"on k must satisfy the aggregate, got:\n${agg.queryExecution.executedPlan}")
+      assert(agg.collect().map(r => (r.getLong(0), r.getLong(1))).sorted === want, name)
+    }
+  }
+
+  test("the two copies of a partitioned checkpoint in a self-join scan the same result") {
+    import org.apache.spark.sql.execution.RDDScanExec
+    import org.apache.spark.sql.catalyst.plans.physical.UnknownPartitioning
+    val ck = Iterate.ckpt(spark.range(0, 1000, 1, 4)
+      .select((col("id") % 10).as("k"), col("id").as("v")).repartition(col("k")))
+    val j = ck.join(ck.select(col("k").as("k2"), col("v").as("v2")), col("v") === col("v2"))
+    val scans = j.queryExecution.sparkPlan.collect { case s: RDDScanExec => s }
+    assert(scans.size === 2)
+    assert(scans.forall(!_.outputPartitioning.isInstanceOf[UnknownPartitioning]))
+    assert(scans(0).output.map(_.exprId) != scans(1).output.map(_.exprId))
+    // equal canonical forms are what lets exchanges above them be reused
+    assert(scans(0).sameResult(scans(1)))
+  }
+
+  test("checkpoint stats are the stored bytes every superstep of a 30-round self-join loop") {
+    import org.apache.spark.sql.GraftShims
+    import org.apache.spark.sql.execution.LogicalRDD
+    var state = Iterate.ckpt(spark.range(0, 200, 1, 4)
+      .select(col("id"), (col("id") % 7).as("v")))
+    val rounds = (1 to 30).map { _ =>
+      val other = state.select(col("id"), col("v").as("w"))
+      val next = state.join(other, "id")
+        .select(col("id"), ((col("v") + col("w") + 1) % 7).as("v"))
+      val t0 = System.nanoTime()
+      next.queryExecution.executedPlan
+      val planMs = (System.nanoTime() - t0) / 1e6
+      state = Iterate.ckpt(next)
+      val leaf = state.queryExecution.analyzed.asInstanceOf[LogicalRDD]
+      GraftShims.waitListenerBus(spark)
+      val stored = spark.sparkContext.getRDDStorageInfo
+        .filter(_.id == leaf.rdd.id).map(i => i.memSize + i.diskSize).sum
+      assert(leaf.stats.sizeInBytes === BigInt(stored))
+      assert(leaf.stats.rowCount === Some(BigInt(200)))
+      (stored, planMs)
+    }
+    val sizes = rounds.map(_._1)
+    assert(sizes.forall(_ > 0) && sizes.max <= 2 * sizes.min,
+      s"checkpoint bytes must not grow with the round: ${sizes.mkString(",")}")
+    def median(xs: Seq[Double]) = xs.sorted.apply(xs.size / 2)
+    val early = median(rounds.take(10).map(_._2))
+    val late = median(rounds.takeRight(10).map(_._2))
+    assert(late <= 3 * early + 50, s"planning time grew: $early ms -> $late ms")
   }
 }
